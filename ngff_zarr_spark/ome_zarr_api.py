@@ -438,6 +438,35 @@ def _batch_task_sizing(
     return n_tasks, n_fields >= n_tasks
 
 
+def _has_jvm(spark: SparkSession) -> bool:
+    """False on Spark Connect, whose sessions have no JVM handle."""
+    return getattr(spark, "_jvm", None) is not None
+
+
+@contextlib.contextmanager
+def _pinned_active_session(spark: SparkSession):
+    """Pin the calling thread's JVM active session to ``spark`` for the
+    block, then restore the thread's previous one (or clear it if it
+    had none). The JVM resolves Python data sources through this
+    THREAD-LOCAL session, and a fresh Python thread's JVM thread has
+    none, so the ome_zarr lookup dies with DATA_SOURCE_NOT_FOUND. A no-op
+    on Spark Connect, which has no per-thread session lookup of this
+    form."""
+    if not _has_jvm(spark):
+        yield
+        return
+    jcls = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    prev = jcls.getActiveSession()
+    jcls.setActiveSession(spark._jsparkSession)
+    try:
+        yield
+    finally:
+        if prev.isDefined():
+            jcls.setActiveSession(prev.get())
+        else:
+            jcls.clearActiveSession()
+
+
 def write_image_batch(
     fields: list[tuple[DataFrame, str]],
     store_path: str,
@@ -467,106 +496,87 @@ def write_image_batch(
     spark = fields[0][0].sparkSession
     register(spark)
     # Thread-safety for the overlapped-jobs caller (hcs.write_hcs_fields
-    # runs independent batches from a small pool — guide §2.6): the JVM
-    # resolves Python data sources through the THREAD-LOCAL active
-    # session, and a fresh Python thread's JVM thread has none, so the
-    # ome_zarr lookup dies with DATA_SOURCE_NOT_FOUND. Pin this thread's
-    # active session to the DataFrames' own session for the duration of
-    # the call and restore the previous one after (the foreachBatch
-    # caller thread's active session is the micro-batch clone and must
-    # come back). Classic-mode only; Spark Connect has no JVM handle and
-    # no per-thread session lookup of this form.
-    _jcls = _prev_active = None
-    try:
-        _jcls = spark._jvm.org.apache.spark.sql.classic.SparkSession
-        _prev_active = _jcls.getActiveSession()
-        _jcls.setActiveSession(spark._jsparkSession)
-    except Exception:  # noqa: BLE001 - non-classic backend: lookup works as-is
-        _jcls = None
-    grid = [-(-shape[d] // chunks.get(d, 1)) for d in dims]
-    n_chunks = math.prod(grid)
-    if (
-        n_chunks * len(fields) >= 2**63
-        or math.prod(chunks.get(d, 1) for d in dims) >= 2**63
-    ):
-        # same loud-failure rule as write_image: a silent long overflow
-        # in either mixed-radix fold (ck or off) scatters pixels
-        raise ValueError(
-            "field count x chunk grid / chunk shape too large for packed write keys"
-        )
+    # runs independent batches from a small pool — guide §2.6): pin
+    # this thread's active session to the DataFrames' own session for
+    # the call (the foreachBatch caller thread's active session is the
+    # micro-batch clone and comes back on exit).
+    with _pinned_active_session(spark):
+        grid = [-(-shape[d] // chunks.get(d, 1)) for d in dims]
+        n_chunks = math.prod(grid)
+        if (
+            n_chunks * len(fields) >= 2**63
+            or math.prod(chunks.get(d, 1) for d in dims) >= 2**63
+        ):
+            # same loud-failure rule as write_image: a silent long overflow
+            # in either mixed-radix fold (ck or off) scatters pixels
+            raise ValueError(
+                "field count x chunk grid / chunk shape too large for packed write keys"
+            )
 
-    # ONE spark.sql call for the WHOLE union, not a per-field
-    # DataFrame-method chain: even the selectExpr+coalesce+unionByName
-    # form costs 3 py4j round-trips per field (~9 ms each — measured
-    # 1.7 s of driver time per 64-field job); registering each source
-    # once and parsing a single 64-branch UNION ALL string is 65 calls
-    # and the multi-branch analysis happens JVM-side. The per-branch
-    # /*+ COALESCE(1) */ hint keeps the physical shape identical (one
-    # map task per field — a field is a few KB of rows, not
-    # 64 x default-parallelism). View names live in the reserved
-    # ``_ngff_wib_*`` namespace and are UNIQUE PER CALL (monotonic
-    # counter), so concurrent batches never see each other's views even
-    # when analysis is deferred (Spark Connect), and no user view can be
-    # clobbered; the finally-block drop leaves the caller's catalog
-    # exactly as it was.
-    ck_sql = f"({dims[0]} div {chunks.get(dims[0], 1)})"
-    for d, g in zip(dims[1:], grid[1:]):
-        ck_sql = f"({ck_sql} * {g} + ({d} div {chunks.get(d, 1)}))"
-    off_sql = f"({dims[0]} % {chunks.get(dims[0], 1)})"
-    for d in dims[1:]:
-        c = chunks.get(d, 1)
-        off_sql = f"({off_sql} * {c} + ({d} % {c}))"
+        # ONE spark.sql call for the WHOLE union, not a per-field
+        # DataFrame-method chain: even the selectExpr+coalesce+unionByName
+        # form costs 3 py4j round-trips per field (~9 ms each — measured
+        # 1.7 s of driver time per 64-field job); registering each source
+        # once and parsing a single 64-branch UNION ALL string is 65 calls
+        # and the multi-branch analysis happens JVM-side. The per-branch
+        # /*+ COALESCE(1) */ hint keeps the physical shape identical (one
+        # map task per field — a field is a few KB of rows, not
+        # 64 x default-parallelism). View names live in the reserved
+        # ``_ngff_wib_*`` namespace and are UNIQUE PER CALL (monotonic
+        # counter), so concurrent batches never see each other's views even
+        # when analysis is deferred (Spark Connect), and no user view can be
+        # clobbered; the finally-block drop leaves the caller's catalog
+        # exactly as it was.
+        ck_sql = f"({dims[0]} div {chunks.get(dims[0], 1)})"
+        for d, g in zip(dims[1:], grid[1:]):
+            ck_sql = f"({ck_sql} * {g} + ({d} div {chunks.get(d, 1)}))"
+        off_sql = f"({dims[0]} % {chunks.get(dims[0], 1)})"
+        for d in dims[1:]:
+            c = chunks.get(d, 1)
+            off_sql = f"({off_sql} * {c} + ({d} % {c}))"
 
-    global _WIB_CALL_SEQ
-    with _WIB_VIEW_LOCK:
-        _WIB_CALL_SEQ += 1
-        seq = _WIB_CALL_SEQ
-    view_names = [f"_ngff_wib_{seq}_{fid}" for fid in range(len(fields))]
-    # hint only on the coalesce path: on the few-huge-fields repartition
-    # path a per-branch COALESCE(1) would serialize each field's whole
-    # upstream compute onto one task (code-review r17)
-    _, use_coalesce = _batch_task_sizing(
-        len(fields), n_chunks, dims, chunks, dtype, compressor
-    )
-    hint = "/*+ COALESCE(1) */ " if use_coalesce else ""
-    branches = []
-    for fid, (df, _) in enumerate(fields):
-        df.createOrReplaceTempView(view_names[fid])
-        branches.append(
-            f"SELECT {hint}"
-            f"CAST({ck_sql} + {fid * n_chunks} AS BIGINT) AS ck, "
-            f"CAST({off_sql} AS BIGINT) AS off, v FROM {view_names[fid]}"
+        global _WIB_CALL_SEQ
+        with _WIB_VIEW_LOCK:
+            _WIB_CALL_SEQ += 1
+            seq = _WIB_CALL_SEQ
+        view_names = [f"_ngff_wib_{seq}_{fid}" for fid in range(len(fields))]
+        # hint only on the coalesce path: on the few-huge-fields repartition
+        # path a per-branch COALESCE(1) would serialize each field's whole
+        # upstream compute onto one task (code-review r17)
+        _, use_coalesce = _batch_task_sizing(
+            len(fields), n_chunks, dims, chunks, dtype, compressor
         )
-    try:
-        packed = _pack_batch_plan(
-            spark, " UNION ALL ".join(branches), len(fields), n_chunks,
-            dims, chunks, dtype, compressor,
-        )
-        (
-            packed.write.format("ome_zarr")
-            .mode("overwrite")
-            .option("path", store_path)
-            .option("array_paths", _json.dumps([p for _, p in fields]))
-            .option("zarr_format", str(zarr_format))
-            .option("shape", ",".join(str(shape[d]) for d in dims))
-            .option("chunks", ",".join(str(chunks.get(d, 1)) for d in dims))
-            .option("dims", ",".join(dims))
-            .option("dtype", dtype)
-            .option("compressor", compressor or "")
-            .option("packed", "true")
-            .save()
-        )
-    finally:
-        for nm in view_names:
-            spark.catalog.dropTempView(nm)
-        if _jcls is not None:
-            try:
-                if _prev_active is not None and _prev_active.isDefined():
-                    _jcls.setActiveSession(_prev_active.get())
-                else:
-                    _jcls.clearActiveSession()
-            except Exception:  # noqa: BLE001 - best-effort restore
-                pass
+        hint = "/*+ COALESCE(1) */ " if use_coalesce else ""
+        branches = []
+        for fid, (df, _) in enumerate(fields):
+            df.createOrReplaceTempView(view_names[fid])
+            branches.append(
+                f"SELECT {hint}"
+                f"CAST({ck_sql} + {fid * n_chunks} AS BIGINT) AS ck, "
+                f"CAST({off_sql} AS BIGINT) AS off, v FROM {view_names[fid]}"
+            )
+        try:
+            packed = _pack_batch_plan(
+                spark, " UNION ALL ".join(branches), len(fields), n_chunks,
+                dims, chunks, dtype, compressor,
+            )
+            (
+                packed.write.format("ome_zarr")
+                .mode("overwrite")
+                .option("path", store_path)
+                .option("array_paths", _json.dumps([p for _, p in fields]))
+                .option("zarr_format", str(zarr_format))
+                .option("shape", ",".join(str(shape[d]) for d in dims))
+                .option("chunks", ",".join(str(chunks.get(d, 1)) for d in dims))
+                .option("dims", ",".join(dims))
+                .option("dtype", dtype)
+                .option("compressor", compressor or "")
+                .option("packed", "true")
+                .save()
+            )
+        finally:
+            for nm in view_names:
+                spark.catalog.dropTempView(nm)
 
 
 def read_image(
@@ -842,21 +852,14 @@ def to_ngff_zarr(
         """Concurrent level writes: yields a submit((img, path, df,
         cps)) function; exiting the block waits for every write and
         propagates the first failure. Each worker pins the JVM
-        thread-local active session (the write_image_batch threading
-        contract: a fresh Python thread's JVM thread has none and the
-        ome_zarr data-source lookup dies with DATA_SOURCE_NOT_FOUND)."""
+        thread-local active session (_pinned_active_session). Without a
+        JVM handle (Spark Connect) there is nothing to pin, so submit
+        runs each write inline, in submit order."""
         from concurrent.futures import ThreadPoolExecutor
 
         def _write_level(args):
             img_i, path_i, df_i, cps_i = args
-            jcls = prev_active = None
-            try:
-                jcls = spark._jvm.org.apache.spark.sql.classic.SparkSession
-                prev_active = jcls.getActiveSession()
-                jcls.setActiveSession(spark._jsparkSession)
-            except Exception:  # noqa: BLE001 - non-classic backend
-                jcls = None
-            try:
+            with _pinned_active_session(spark):
                 spark.sparkContext.setJobDescription(f"pyramid write {path_i}")
                 write_image(
                     df_i,
@@ -873,13 +876,10 @@ def to_ngff_zarr(
                     zarr_format=zarr_format,
                     chunks_per_shard=cps_i,
                 )
-            finally:
-                if jcls is not None:
-                    try:
-                        jcls.setActiveSession(prev_active)
-                    except Exception:  # noqa: BLE001 - best effort restore
-                        pass
 
+        if not _has_jvm(spark):
+            yield _write_level
+            return
         futs = []
         with ThreadPoolExecutor(max_workers=workers) as pool:
             yield lambda args: futs.append(pool.submit(_write_level, args))

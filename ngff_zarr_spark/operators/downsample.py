@@ -216,11 +216,7 @@ def label_downsample(
     contributing voxel lies inside the output block, so the plan is a
     center-voxel filter (pushed to the scan) + ONE block hash
     aggregate: no halo exchange, single shuffle, and the filter drops
-    all but 2/f of the rows per downsampled dim before the exchange.
-
-    (The previous tent-weight approximation — weight f-|2o-(f-1)| over
-    the whole block — is retained as :func:`label_downsample_tent` for
-    comparison; it is NOT the reference algorithm.)"""
+    all but 2/f of the rows per downsampled dim before the exchange."""
     f = _factors(factors)
     df = crop_to_factor(df, shape, factors)
     cond = None
@@ -236,25 +232,3 @@ def label_downsample(
         .agg(F.count(F.lit(1)).cast("long").alias("votes"))
     )
     return _mode_over_blocks(counts, "votes")
-
-
-def label_downsample_tent(
-    df: DataFrame, shape: dict[str, int], factors: dict[str, int]
-) -> DataFrame:
-    """Tent-weighted label mode (r02's A3 stand-in, kept for
-    comparison): every voxel in the f-block votes with integer weight
-    prod_dims (f - |2*o - (f-1)|). Smoother than the reference
-    algorithm but NOT it — use :func:`label_downsample` for parity."""
-    f = _factors(factors)
-    df = crop_to_factor(df, shape, factors)
-    w = F.lit(1)
-    for d in SPATIAL:
-        if f[d] > 1:
-            off = F.col(d) % f[d]
-            w = w * (F.lit(f[d]) - F.abs(off * 2 - (f[d] - 1)))
-    counts = (
-        df.withColumn("w", w.cast("long"))
-        .groupBy(*_block_cols(factors), F.col("v"))
-        .agg(F.sum("w").alias("wsum"))
-    )
-    return _mode_over_blocks(counts, "wsum")

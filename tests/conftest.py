@@ -12,7 +12,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from ngff_zarr_spark.session import get_spark
 
-    spark = get_spark("tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("tests")
     yield spark
 
 

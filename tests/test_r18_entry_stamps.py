@@ -18,8 +18,17 @@ import sys
 
 
 def test_bench_out_carries_entry_stamps():
+    # preserve both standing captures bench.py rewrites (bench_out.json
+    # and its per-cpus stamp bench_out_<cpus>.json)
     out_path = "/root/repo/bench_out.json"
-    saved = open(out_path).read() if os.path.exists(out_path) else None
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    out_paths = (
+        out_path,
+        os.path.join(os.path.dirname(out_path), f"bench_out_{cpus}.json"),
+    )
+    saved = {
+        p: open(p).read() if os.path.exists(p) else None for p in out_paths
+    }
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -43,9 +52,13 @@ def test_bench_out_carries_entry_stamps():
         # foreign_cpu is a float on Linux (None only off-/proc)
         assert st["foreign_cpu"] is None or st["foreign_cpu"] >= 0.0
     finally:
-        if saved is not None:
-            with open(out_path, "w") as fh:
-                fh.write(saved)
+        for p, text in saved.items():
+            if text is None:
+                if os.path.exists(p):
+                    os.remove(p)
+            else:
+                with open(p, "w") as fh:
+                    fh.write(text)
 
 
 def test_check_bars_prints_stamps_next_to_violation(tmp_path):

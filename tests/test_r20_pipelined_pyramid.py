@@ -126,3 +126,58 @@ def test_callbacks_still_fire_in_level_order(spark, tmp_path):
         str(tmp_path / "cb.ome.zarr"), ms, version="0.4", compressor="gzip"
     )
     assert fired == [0, 1]
+
+
+def test_pinned_session_cleared_on_exit_in_fresh_thread(spark):
+    # a pool worker's JVM thread starts with no active session; the
+    # helper pins the write session for the block and must leave the
+    # thread as it found it (cleared), not pinned to a stale session
+    import threading
+
+    from ngff_zarr_spark.ome_zarr_api import _pinned_active_session
+
+    jcls = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    seen = {}
+
+    def worker():
+        seen["before"] = jcls.getActiveSession().isDefined()
+        with _pinned_active_session(spark):
+            active = jcls.getActiveSession()
+            seen["inside"] = active.isDefined() and active.get().equals(
+                spark._jsparkSession
+            )
+        seen["after"] = jcls.getActiveSession().isDefined()
+
+    t = threading.Thread(target=worker)
+    t.start()
+    t.join(120)
+    assert not t.is_alive()
+    assert seen == {"before": False, "inside": True, "after": False}
+
+
+def test_write_pool_runs_inline_without_jvm(spark, tmp_path, monkeypatch):
+    # Spark Connect has no JVM handle to pin: the pipelined level
+    # writes must run on the calling thread instead of the pool, and
+    # the store must match the sequential path byte-for-byte
+    import threading
+
+    import ngff_zarr_spark.ome_zarr_api as api
+
+    threads = []
+    real_write = api.write_image
+
+    def recording_write(*a, **k):
+        threads.append(threading.current_thread())
+        return real_write(*a, **k)
+
+    monkeypatch.setattr(api, "_has_jvm", lambda s: False)
+    monkeypatch.setattr(api, "write_image", recording_write)
+    a = str(tmp_path / "inline.ome.zarr")
+    b = str(tmp_path / "sequential.ome.zarr")
+    to_ngff_zarr(a, _ms(spark), version="0.4", compressor="gzip")
+    assert threads == [threading.current_thread()] * 2
+    monkeypatch.undo()
+    to_ngff_zarr(
+        b, _ms(spark), version="0.4", compressor="gzip", progress=_Prog()
+    )
+    assert _tree_digest(a) == _tree_digest(b)
