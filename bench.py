@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ngff_zarr_spark import gate
 from ngff_zarr_spark.fixtures import ImageSpec, pixel_df
-from ngff_zarr_spark.operators import bin_shrink, gaussian_downsample
+from ngff_zarr_spark.operators import bin_shrink
 from ngff_zarr_spark.session import get_spark
 
 BENCH_IMG = ImageSpec("bench3d", z=96, y=256, x=257)  # ~6.3M voxels, odd x

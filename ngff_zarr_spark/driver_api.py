@@ -86,7 +86,7 @@ def convert_images_to_ome_zarr(
     the store — all as the engine's distributed jobs."""
     from .ingest.cli import cli_input_to_ngff_image
     from .ingest.detect import ConversionBackend, detect_cli_io_backend
-    from .ome_zarr_api import to_multiscales, to_ngff_zarr
+    from .ome_zarr_api import default_chunks, to_multiscales, to_ngff_zarr
     from .plans.planner import pyramid_scale_factors
 
     if ome_zarr_version not in ("0.4", "0.5"):
@@ -115,10 +115,14 @@ def convert_images_to_ome_zarr(
             img.axes_units = {**(img.axes_units or {}), **units}
         if name:
             img.name = name
-        if scale_factors is None:
-            scale_factors = pyramid_scale_factors(img.shape)
         if isinstance(chunks, (list, tuple)):
             chunks = dict(zip(img.dims, chunks))
+        if scale_factors is None:
+            # plan for the chunks the levels will be written with, as
+            # to_multiscales' own integer path does
+            scale_factors = pyramid_scale_factors(
+                img.shape, out_chunks={**default_chunks(img.dims), **(chunks or {})}
+            )
         if isinstance(chunks_per_shard, (list, tuple)):
             chunks_per_shard = dict(zip(img.dims, chunks_per_shard))
         ms = to_multiscales(img, scale_factors=scale_factors, method=method, chunks=chunks)

@@ -6,9 +6,16 @@ the ``ome_zarr`` DataSource.
 
 Execution shape (O3, the reference's ``_prepare_next_scale``
 checkpointing): each pyramid level is *written, then read back* as the
-source for the next level — per-level Spark jobs bound the logical-plan
-depth exactly like the reference bounds its Dask graph, and the shuffle
-for level i+1 reads only the (8x smaller) level i.
+source for the next level, so each level's job reads only the (8x
+smaller) level before it. Level 0 is the pixel-table write
+(``write_image``: one shuffle by chunk key). With a Gaussian method,
+every later level is ONE map-only Spark job with no exchange
+(``write_gaussian_level``, the reference's per-chunk ``map_overlap``):
+a task unit per output chunk or shard reads its input box plus the
+kernel-radius halo from the stored previous level, edge-pads it at the
+image border, blurs and subsamples it in numpy and writes the chunk.
+The other methods build each later level as a lazy pixel-table
+operator over the stored previous level, written by ``write_image``.
 """
 
 from __future__ import annotations
@@ -16,6 +23,7 @@ from __future__ import annotations
 import contextlib
 import math
 import threading
+from functools import partial
 from typing import Callable, Optional
 
 import numpy as np
@@ -35,31 +43,31 @@ from .model import (
     dim_axis_type,
 )
 from .operators import bin_shrink, gaussian_downsample, label_downsample, mode_downsample, nearest
+from .operators.kernels import SPATIAL, gaussian_block, gaussian_weights
 from .plans.planner import (
     next_scale_metadata,
     pyramid_scale_factors,
     relative_dim_factors,
     update_previous_dim_factors,
 )
-from .sources.ome_zarr import PIXEL_DIMS, OmeZarrDataSource, register
-from .sources.zarr_store import open_store
+from .sources.ome_zarr import array_docs, register
+from .sources.zarr_store import ZarrArrayMeta, open_store, read_box
+
+# The *_GAUSSIAN methods share one separable convolution but select
+# DIFFERENT kernel weights: ITK/ITK-Wasm use the discrete Gaussian
+# (modified-Bessel coefficients, operators/itk_gaussian.py), dask-image
+# the sampled continuous Gaussian — matching each backend's published
+# math.
+GAUSSIAN_KERNELS: dict[str, str] = {
+    "ITKWASM_GAUSSIAN": "itk_bessel",
+    "ITK_GAUSSIAN": "itk_bessel",
+    "DASK_IMAGE_GAUSSIAN": "sampled",
+}
 
 # Method registry (reference Methods enum dispatch,
-# to_multiscales.py:325-359). The *_GAUSSIAN variants share one
-# separable-convolution engine operator but select DIFFERENT kernel
-# weights: ITK/ITK-Wasm use the discrete Gaussian (modified-Bessel
-# coefficients, operators/itk_gaussian.py), dask-image the sampled
-# continuous Gaussian — matching each backend's published math.
+# to_multiscales.py:325-359): the lazy pixel-table operator per method.
 METHODS: dict[str, Callable] = {
-    "ITKWASM_GAUSSIAN": lambda df, shape, f: gaussian_downsample(
-        df, shape, f, kernel="itk_bessel"
-    ),
-    "ITK_GAUSSIAN": lambda df, shape, f: gaussian_downsample(
-        df, shape, f, kernel="itk_bessel"
-    ),
-    "DASK_IMAGE_GAUSSIAN": lambda df, shape, f: gaussian_downsample(
-        df, shape, f, kernel="sampled"
-    ),
+    **{m: partial(gaussian_downsample, kernel=k) for m, k in GAUSSIAN_KERNELS.items()},
     "ITKWASM_BIN_SHRINK": bin_shrink,
     "ITK_BIN_SHRINK": bin_shrink,
     "DASK_IMAGE_NEAREST": nearest,
@@ -744,6 +752,109 @@ def copy_array(
     return int(counts.agg(F.sum("n")).first()[0] or 0)
 
 
+def write_gaussian_level(
+    spark: SparkSession,
+    store_path: str,
+    src_path: str,
+    dst_path: str,
+    shape: dict[str, int],
+    dims: list[str],
+    chunks: dict[str, int],
+    factors: dict[str, int],
+    kernel: str,
+    dtype: str,
+    compressor: Optional[str] = "gzip",
+    zarr_format: int = 2,
+    chunks_per_shard: Optional[dict[str, int]] = None,
+) -> None:
+    """Write the array ``dst_path`` (``shape``) as the Gaussian
+    downsample by ``factors`` of the stored array ``src_path``, in ONE
+    map-only Spark job with no exchange: the reference's per-chunk
+    ``map_overlap`` (depth = kernel radius, boundary 'nearest').
+
+    ``spark.range`` enumerates the output chunks, or the output shards
+    when ``chunks_per_shard`` is set, and each task, per unit, reads its
+    input box plus the kernel-radius halo from the stored source
+    (``read_box``), edge-pads the part of the halo outside the image,
+    runs ``gaussian_block`` and writes the unit with ``write_chunk`` /
+    ``write_shard``. The arithmetic is the window form's
+    (``METHODS[m]``) float64 sequence and the store cast is the
+    writer's ``astype``, so the bytes equal ``read_image`` → ``METHODS``
+    → ``write_image``. Like the DataSource writer, the array prefix is
+    cleared first; the array's metadata is published only after the
+    job succeeds."""
+    store = open_store(store_path)
+    src = store.read_array_meta(src_path, zarr_format)
+    dst = ZarrArrayMeta(
+        path=dst_path,
+        shape=tuple(shape[d] for d in dims),
+        chunks=tuple(chunks.get(d, 1) for d in dims),
+        dtype=np.dtype(dtype),
+        compressor=compressor or None,
+        zarr_format=zarr_format,
+        dimension_names=list(dims) if zarr_format == 3 else None,
+        chunks_per_shard=(
+            tuple(chunks_per_shard.get(d, 1) for d in dims) if chunks_per_shard else None
+        ),
+    )
+    weights = gaussian_weights(factors, kernel)
+    passes = [(dims.index(d), weights[d]) for d in SPATIAL if d in weights]
+    fac = [int(factors.get(d, 1)) for d in dims]
+    rad = [len(weights[d]) - 1 if d in weights else 0 for d in dims]
+    sample = tuple(slice(None, None, f) for f in fac)
+    sharded = dst.chunks_per_shard is not None
+    unit = dst.shard_shape if sharded else dst.chunks
+    grid = dst.shard_grid if sharded else dst.chunk_grid
+    n_units = math.prod(grid)
+
+    def downsample(st, o_lo, o_hi) -> np.ndarray:
+        # output [o_lo, o_hi) samples input o*f, so its support is
+        # [o_lo*f - r, (o_hi-1)*f + r]; the part outside the image is
+        # edge padding
+        lo, hi, pad = [], [], []
+        for a, b, f, r, n in zip(o_lo, o_hi, fac, rad, src.shape):
+            want_lo, want_hi = a * f - r, (b - 1) * f + r + 1
+            lo.append(max(0, want_lo))
+            hi.append(min(n, want_hi))
+            pad.append((lo[-1] - want_lo, want_hi - hi[-1]))
+        block = read_box(src, st, tuple(lo), tuple(hi)).astype(np.float64)
+        return gaussian_block(block, tuple(pad), passes, sample).astype(dst.dtype)
+
+    def write_units(batches):
+        st = open_store(store_path)
+        for batch in batches:
+            for u in batch.column("id").to_numpy():
+                uidx = tuple(int(i) for i in np.unravel_index(int(u), grid))
+                o_lo = tuple(i * s for i, s in zip(uidx, unit))
+                o_hi = tuple(min(e, a + s) for a, s, e in zip(o_lo, unit, dst.shape))
+                out = downsample(st, o_lo, o_hi)
+                if not sharded:
+                    st.write_chunk(dst, uidx, out)
+                    continue
+                # split the shard into its inner chunks; slices past the
+                # array edge clip to the chunk's valid extent
+                inner_chunks = {}
+                for inner in np.ndindex(*dst.chunks_per_shard):
+                    cidx = tuple(i * n + j for i, n, j in zip(uidx, dst.chunks_per_shard, inner))
+                    if all(ci < g for ci, g in zip(cidx, dst.chunk_grid)):
+                        inner_chunks[inner] = out[
+                            tuple(slice(j * c, (j + 1) * c) for j, c in zip(inner, dst.chunks))
+                        ]
+                st.write_shard(dst, uidx, inner_chunks)
+        return iter(())
+
+    store.delete_prefix(dst_path)
+    sc = spark.sparkContext
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"pyramid level {dst_path}")
+    try:
+        n_parts = max(1, min(n_units, sc.defaultParallelism))
+        spark.range(0, n_units, 1, n_parts).mapInArrow(write_units, "id long").collect()
+    finally:
+        sc.setJobDescription(prev_desc)
+    store.put_json_many(array_docs(dst, dims))
+
+
 def to_ngff_zarr(
     store_path: str,
     multiscales: Multiscales,
@@ -805,7 +916,8 @@ def to_ngff_zarr(
 
     chunks = multiscales.chunks or default_chunks(base.dims)
     # same default as the reference (to_multiscales.py:325-331)
-    op = METHODS[multiscales.method or "ITKWASM_GAUSSIAN"]
+    method = multiscales.method or "ITKWASM_GAUSSIAN"
+    op = METHODS[method]
     previous = {d: 1 for d in base.spatial_dims()}
     prev_img = base
     prev_path = None
@@ -815,6 +927,10 @@ def to_ngff_zarr(
     # levels are data, not plans, and are copied through verbatim
     # (version conversion C9 depends on not re-deriving them).
     recompute = bool(multiscales.scale_factors) and multiscales.method is not None
+    # Gaussian levels >= 1 are one map-only job each over the stored
+    # previous level (write_gaussian_level); the other methods stay
+    # lazy pixel-table operators written by write_image
+    gaussian_kernel = GAUSSIAN_KERNELS.get(method) if recompute else None
 
     def _level_path(i: int, img: NgffImage) -> str:
         if meta is not None and i < len(meta.datasets):
@@ -886,28 +1002,33 @@ def to_ngff_zarr(
             for f in futs:
                 f.result()
 
-    # r20 (guide §2.6): OVERLAP the two biggest write jobs. Level 1 is
-    # ONE downsample step deep whether it reads the stored level 0 or
-    # the base frame — the O3 contract bounds lineage depth, not which
-    # copy of the bytes the step reads — and for an identity-roundtrip
-    # dtype (float64: the writer's astype(float64) and the reader's
-    # astype(np.float64) are both no-ops) the stored read-back is
-    # value-identical to the base frame with v cast to double. So
-    # compute level 1 from the base plan and run the level-0 and
-    # level-1 write jobs concurrently from a 2-worker pool; levels >= 2
-    # keep the stored-level read (each is <= 1/64 of the base — the
-    # sequential tail is negligible, and deep levels keep the one-step
-    # lineage without re-running the cascade). Store bytes verified
-    # IDENTICAL to the sequential path (recursive tree digest, 3 reps);
-    # interleaved A/B on the bench volume: 4.62-4.86 s -> 2.70-2.76 s.
-    # At cluster scale the trade is one extra read of the SOURCE table
-    # instead of one read of the just-written level-0 store — the same
-    # byte class, and the two jobs back-fill each other's task tails.
-    # Falls back to the sequential stored-read path whenever progress
-    # reporting, computed callbacks (T3 fires per level IN write
-    # order), sharding, or a non-identity dtype is in play.
+    # Non-Gaussian methods only (bin shrink, nearest, mode, label
+    # mode): OVERLAP the level-0 and level-1 write jobs. Level 1 is ONE
+    # downsample step deep whether it reads the stored level 0 or the
+    # base frame — the O3 contract bounds lineage depth, not which copy
+    # of the bytes the step reads — and for an identity-roundtrip dtype
+    # (float64: the writer's astype(float64) and the reader's
+    # astype(np.float64) are both no-ops) the stored read-back holds the
+    # same VALUES as the base frame with v cast to double. So level 1
+    # is computed from the base plan and both write jobs run from a
+    # 2-worker pool; levels >= 2 keep the stored-level read.
+    # - The equality is value-level, not a byte guarantee: an
+    #   aggregate's float result depends on its partial-sum order
+    #   (F.avg in bin_shrink), which follows how each plan is
+    #   partitioned. The stores matched byte for byte on the test
+    #   fixtures; other inputs may differ in the last bit.
+    # - The base plan runs twice: once for the level-0 write and again
+    #   inside the level-1 operator. A cheap scan pays nothing for
+    #   that; an expensive computed base frame pays it in full.
+    # Gaussian methods never take this branch: write_gaussian_level
+    # reads the stored level with no exchange, which is cheaper than a
+    # second pass over the base plan. Falls back to the sequential path
+    # whenever progress reporting, computed callbacks (T3 fires per
+    # level IN write order), sharding, or a non-identity dtype is in
+    # play.
     pipeline_l1 = (
         recompute
+        and gaussian_kernel is None
         and len(multiscales.images) >= 2
         and progress is None
         and chunks_per_shard is None
@@ -972,14 +1093,6 @@ def to_ngff_zarr(
         if i < start_i:
             continue
         path = _level_path(i, img)
-        if i == 0 or not recompute:
-            df = img.data
-        else:
-            level = multiscales.scale_factors[i - 1]
-            rel = relative_dim_factors(prev_img.dims, level, previous)
-            source = read_image(spark, store_path, prev_path, zarr_format)
-            df = op(source, prev_img.shape, rel)
-            previous = update_previous_dim_factors(level, base.spatial_dims(), previous)
         lvl_chunks = {d: min(chunks.get(d, 1), max(1, img.shape[d])) for d in img.dims}
         cps = _level_cps(img, lvl_chunks)
         if progress is not None:
@@ -988,18 +1101,35 @@ def to_ngff_zarr(
             # explicit parent group node, as zarr-python creates for the
             # reference (v2 scale{i}/.zgroup, v3 scale{i}/zarr.json)
             store.write_group(path.rsplit("/", 1)[0], {}, zarr_format)
-        write_image(
-            df,
-            store_path,
-            path,
-            img.shape,
-            img.dims,
-            lvl_chunks,
-            dtype=dtype,
-            compressor=compressor,
-            zarr_format=zarr_format,
-            chunks_per_shard=cps,
-        )
+        rel = None
+        if i > 0 and recompute:
+            level = multiscales.scale_factors[i - 1]
+            rel = relative_dim_factors(prev_img.dims, level, previous)
+            previous = update_previous_dim_factors(level, base.spatial_dims(), previous)
+        if rel is not None and gaussian_kernel is not None:
+            write_gaussian_level(
+                spark, store_path, prev_path, path, img.shape, img.dims,
+                lvl_chunks, rel, gaussian_kernel, dtype, compressor,
+                zarr_format, cps,
+            )
+        else:
+            if rel is None:
+                df = img.data
+            else:
+                source = read_image(spark, store_path, prev_path, zarr_format)
+                df = op(source, prev_img.shape, rel)
+            write_image(
+                df,
+                store_path,
+                path,
+                img.shape,
+                img.dims,
+                lvl_chunks,
+                dtype=dtype,
+                compressor=compressor,
+                zarr_format=zarr_format,
+                chunks_per_shard=cps,
+            )
         # T3: the write is the materialization point — fire this level's
         # computed callbacks (reference to_ngff_zarr.py:949-951,1170-1174)
         for cb in list(img.computed_callbacks):

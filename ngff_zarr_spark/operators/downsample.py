@@ -32,7 +32,7 @@ chunk-grid repartition makes the aggregate shuffle-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DIMS = ("t", "c", "z", "y", "x")

@@ -19,6 +19,11 @@ chunk. The window form (operators/gaussian.py) remains the
 SQL-checkable oracle semantics; with ``fixed_point_bits`` both paths do
 identical integer arithmetic, so their outputs are bit-equal — which is
 exactly what the a1_gaussian gate entry checks.
+
+``gaussian_block`` is the one numpy Gaussian: this kernel calls it per
+chunk group, and the pyramid level job (ome_zarr_api.
+write_gaussian_level) calls it per output chunk or shard, with the halo
+read from the stored previous level instead of shuffled.
 """
 
 from __future__ import annotations
@@ -54,6 +59,47 @@ def _conv1d_valid(a: np.ndarray, w: list, axis: int) -> np.ndarray:
     return out
 
 
+def gaussian_weights(
+    factors: dict[str, int],
+    kind: str = "sampled",
+    truncate: float = 4.0,
+    fixed_point_bits: Optional[int] = None,
+) -> dict[str, list]:
+    """Half kernel per spatial dim that shrinks (factor > 1), at the
+    sigma the shrink factor implies; dims that keep their size are not
+    blurred and get no entry."""
+    from ..plans.planner import compute_sigma
+    from .gaussian import kernel_weights
+
+    spatial = [d for d in SPATIAL if factors.get(d, 1) > 1]
+    sigmas = compute_sigma([factors[d] for d in spatial])
+    return {
+        d: kernel_weights(s, kind, truncate, fixed_point_bits)
+        for d, s in zip(spatial, sigmas)
+    }
+
+
+def gaussian_block(
+    block: np.ndarray,
+    pad: tuple,
+    passes: list[tuple[int, list]],
+    sample: tuple,
+) -> np.ndarray:
+    """The numpy Gaussian downsample of one block: edge-replicate
+    ``pad`` ((before, after) per axis — the part of the kernel support
+    that lies outside the image, 'nearest' boundary), run the 'valid'
+    1-D convolution for each ``(axis, half weights)`` of ``passes`` in
+    the given order (z→y→x, the window form's order, so the float
+    operations are the same sequence), then take ``sample`` (one slice
+    per axis). Keeps the dtype of ``block``: float64 for the production
+    path, int64 for fixed-point weights."""
+    if any(p != (0, 0) for p in pad):
+        block = np.pad(block, pad, mode="edge")
+    for axis, w in passes:
+        block = _conv1d_valid(block, w, axis)
+    return block[sample]
+
+
 def gaussian_downsample_chunked(
     df: DataFrame,
     shape: dict[str, int],
@@ -71,17 +117,8 @@ def gaussian_downsample_chunked(
     z→y→x pass order); with ``fixed_point_bits`` the integer arithmetic
     is bit-identical, which the a1_gaussian oracle verifies.
     """
-    from ..plans.planner import compute_sigma
-    from .gaussian import SPATIAL as GS
-    from .gaussian import kernel_weights as _kw
-
-    spatial = [d for d in GS if factors.get(d, 1) > 1]
-    sigmas = dict(zip(spatial, compute_sigma([factors[d] for d in spatial])))
-    weights = {
-        d: _kw(sigmas[d], kernel_weights_kind, truncate, fixed_point_bits)
-        for d in spatial
-    }
-    radii = {d: len(weights[d]) - 1 for d in spatial}
+    weights = gaussian_weights(factors, kernel_weights_kind, truncate, fixed_point_bits)
+    radii = {d: len(w) - 1 for d, w in weights.items()}
     out_type = "long" if fixed_point_bits is not None else "double"
 
     chunks = dict(chunks or {})
@@ -109,7 +146,7 @@ def gaussian_downsample_chunked(
     fac = {d: int(factors.get(d, 1)) for d in SPATIAL}
     ck = {d: int(chunks[d]) for d in SPATIAL}
     rad = {d: int(radii.get(d, 0)) for d in SPATIAL}
-    wts = {d: list(weights[d]) for d in spatial}
+    passes = [(axis, weights[d]) for axis, d in enumerate(SPATIAL) if d in weights]
     np_dtype = np.int64 if fixed_point_bits is not None else np.float64
 
     # pack the shuffle rows: group key g = flat (t, c, chunk idx), pixel
@@ -145,32 +182,23 @@ def gaussian_downsample_chunked(
         py, px = np.divmod(prem, nx)
         arr[pz - lo["z"], py - lo["y"], px - lo["x"]] = tbl["v"].to_numpy().astype(np_dtype)
         # 'nearest' edge replication where the halo would extend past the
-        # image bounds (everywhere else the halo is real neighbor data)
+        # image bounds (everywhere else the halo is real neighbor data);
+        # after the valid convolution the block spans exactly the chunk
+        # core, which is stride-subsampled with floor-crop (trailing
+        # partial blocks dropped)
         pad = tuple(
             (rad[d] - (core[d][0] - lo[d]), rad[d] - (hi[d] - core[d][1])) for d in SPATIAL
         )
-        if any(p != (0, 0) for p in pad):
-            arr = np.pad(arr, pad, mode="edge")
-        # separable passes in z→y→x order (matches the window form)
-        for axis, d in enumerate(SPATIAL):
-            if d in wts:
-                arr = _conv1d_valid(arr, wts[d], axis)
-        # arr now spans exactly the chunk core; stride-subsample with
-        # floor-crop (trailing partial blocks dropped)
-        sel = []
+        sample = []
         out_coords = []
-        for axis, d in enumerate(SPATIAL):
+        for d in SPATIAL:
             f = fac[d]
             start, stop = core[d]
-            if f > 1:
-                limit = f * (shp[d] // f)
-                g0 = -(-start // f) * f  # first multiple of f >= start
-                coords = np.arange(g0, min(stop, limit), f)
-            else:
-                coords = np.arange(start, stop)
-            sel.append(coords - start)
-            out_coords.append(coords // f if f > 1 else coords)
-        sub = arr[np.ix_(*sel)]
+            g0 = -(-start // f) * f  # first multiple of f >= start
+            g1 = min(stop, f * (shp[d] // f))
+            sample.append(slice(g0 - start, max(g0, g1) - start, f))
+            out_coords.append(np.arange(g0, g1, f) // f)
+        sub = gaussian_block(arr, pad, passes, tuple(sample))
         gz, gy, gx = np.meshgrid(*out_coords, indexing="ij")
         n = sub.size
         return pa.table(

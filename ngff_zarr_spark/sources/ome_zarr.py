@@ -386,6 +386,18 @@ class OmeZarrReader(DataSourceReader):
                     yield self._chunk_batch(arr, m.chunk_origin(unit_idx), extent)
 
 
+def array_docs(meta: ZarrArrayMeta, dims: list[str]) -> dict[str, dict]:
+    """The metadata documents that publish one written array, keyed by
+    store key: v3 ``zarr.json`` (dimension names inside), or v2
+    ``.zarray`` plus a ``.zattrs`` holding ``_ARRAY_DIMENSIONS``."""
+    if meta.zarr_format == 3:
+        return {f"{meta.path}/zarr.json": meta.to_v3_json()}
+    return {
+        f"{meta.path}/.zarray": meta.to_v2_json(),
+        f"{meta.path}/.zattrs": {"_ARRAY_DIMENSIONS": list(dims)},
+    }
+
+
 @dataclass
 class ChunkWriteCommit(WriterCommitMessage):
     chunk_keys: list
@@ -611,21 +623,9 @@ class OmeZarrWriter(DataSourceArrowWriter):
         768 serial PUTs, each with its own consolidated read-modify-
         write (VERDICT r15 ask #5)."""
         store = open_store(self.path, self.storage_options)
-        attrs = None
-        if self.zarr_format == 2:
-            attrs = {"_ARRAY_DIMENSIONS": list(self.dims)}
         docs: dict = {}
         for fid in range(len(self.array_paths) if self.array_paths else 1):
-            m = self._meta_for(fid)
-            if m.zarr_format == 3:
-                doc = m.to_v3_json()
-                if attrs:
-                    doc["attributes"] = attrs
-                docs[f"{m.path}/zarr.json"] = doc
-            else:
-                docs[f"{m.path}/.zarray"] = m.to_v2_json()
-                if attrs:
-                    docs[f"{m.path}/.zattrs"] = attrs
+            docs.update(array_docs(self._meta_for(fid), self.dims))
         store.put_json_many(docs)
 
     def abort(self, messages):

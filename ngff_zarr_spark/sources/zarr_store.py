@@ -1038,6 +1038,39 @@ class StoreBase:
         self.put_json("zarr.json", root)
 
 
+def read_box(
+    meta: ZarrArrayMeta, store: StoreBase, lo: tuple[int, ...], hi: tuple[int, ...]
+) -> np.ndarray:
+    """The stored values of the box ``[lo, hi)`` (per axis, in array
+    order) as one ndarray of ``meta.dtype``. Each chunk the box touches
+    is read once; on a sharded array each shard's index is fetched once
+    for all of its inner chunks. Never-written chunks read as
+    ``fill_value``."""
+    out = np.empty(tuple(h - l for l, h in zip(lo, hi)), dtype=meta.dtype)
+    if out.size == 0:
+        return out
+    c_lo = [l // c for l, c in zip(lo, meta.chunks)]
+    c_hi = [-(-h // c) for h, c in zip(hi, meta.chunks)]
+    shard_indexes: dict = {}
+    for rel in np.ndindex(*(b - a for a, b in zip(c_lo, c_hi))):
+        cidx = tuple(a + r for a, r in zip(c_lo, rel))
+        if meta.chunks_per_shard is not None:
+            sidx, _ = meta.shard_index_of(cidx)
+            if sidx not in shard_indexes:
+                shard_indexes[sidx] = store.shard_index(meta, sidx)
+            arr = store.read_chunk_via_index(meta, cidx, shard_indexes[sidx])
+        else:
+            arr = store.read_chunk(meta, cidx)
+        origin = meta.chunk_origin(cidx)
+        src, dst = [], []
+        for o, e, l, h in zip(origin, arr.shape, lo, hi):
+            a, b = max(l, o), min(h, o + e)
+            src.append(slice(a - o, b - o))
+            dst.append(slice(a - l, b - l))
+        out[tuple(dst)] = arr[tuple(src)]
+    return out
+
+
 class ZarrStore(StoreBase):
     """Thin (key → bytes) mapping over a local directory."""
 

@@ -53,6 +53,24 @@ def test_convert_info_read_validate(spark, tmp_path, tiff_file):
     assert v.version == "0.4"
 
 
+def test_convert_plans_levels_for_the_requested_chunks(spark, tmp_path):
+    from ngff_zarr_spark.ingest import cli_input_to_ngff_image, detect_cli_io_backend
+    from ngff_zarr_spark.ome_zarr_api import to_multiscales
+
+    arr = (np.arange(300 * 280, dtype=np.uint16) % 997).reshape(300, 280)
+    p = tmp_path / "big.tif"
+    p.write_bytes(tiff_encode(arr))
+    chunks = {"y": 64, "x": 64}
+    res = convert_images_to_ome_zarr(
+        spark, [str(p)], str(tmp_path / "planned.ome.zarr"), chunks=[64, 64]
+    )
+    assert res.success, res.error
+    img = cli_input_to_ngff_image(spark, detect_cli_io_backend([str(p)]), [str(p)])
+    want = len(to_multiscales(img, chunks=chunks).images)
+    assert want > 1
+    assert res.store_info["n_scales"] == want
+
+
 def test_validate_reports_broken_store(tmp_path):
     bad = tmp_path / "bad.zarr"
     bad.mkdir()

@@ -15,12 +15,15 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_bench_out_carries_entry_stamps():
     # preserve both standing captures bench.py rewrites (bench_out.json
     # and its per-cpus stamp bench_out_<cpus>.json)
-    out_path = "/root/repo/bench_out.json"
+    out_path = os.path.join(REPO_ROOT, "bench_out.json")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     out_paths = (
         out_path,
@@ -38,7 +41,7 @@ def test_bench_out_carries_entry_stamps():
     try:
         r = subprocess.run(
             [sys.executable, "bench.py"],
-            capture_output=True, text=True, timeout=600, cwd="/root/repo", env=env,
+            capture_output=True, text=True, timeout=600, cwd=REPO_ROOT, env=env,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         full = json.load(open(out_path))
@@ -81,7 +84,7 @@ def test_check_bars_prints_stamps_next_to_violation(tmp_path):
     )
     r = subprocess.run(
         [sys.executable, "tools/check_bars.py", str(bench_path), str(baseline)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 1
     out = r.stdout
@@ -110,7 +113,7 @@ def test_check_bars_sub_phase_violation_uses_parent_stamp(tmp_path):
     baseline.write_text("| hcs_stream_write.pixel_jobs | 20 | ≤ 24 s | x |\n")
     r = subprocess.run(
         [sys.executable, "tools/check_bars.py", str(bench_path), str(baseline)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 1
     assert "t_start=10.0s" in r.stdout
@@ -130,7 +133,7 @@ def test_check_bars_margin_watch(tmp_path):
     )
     r = subprocess.run(
         [sys.executable, "tools/check_bars.py", str(bench_path), str(baseline)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 0  # green — watch lines never fail the check
     assert "margin watch close_entry" in r.stdout and "91%" in r.stdout
@@ -147,6 +150,6 @@ def test_check_bars_legacy_capture_without_stamps(tmp_path):
     baseline.write_text("| e | 2 | ≤ 6 s | x |\n")
     r = subprocess.run(
         [sys.executable, "tools/check_bars.py", str(bench_path), str(baseline)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 1 and "VIOLATION e" in r.stdout
