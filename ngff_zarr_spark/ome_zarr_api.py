@@ -16,6 +16,10 @@ kernel-radius halo from the stored previous level, edge-pads it at the
 image border, blurs and subsamples it in numpy and writes the chunk.
 The other methods build each later level as a lazy pixel-table
 operator over the stored previous level, written by ``write_image``.
+A pyramid with no build recipe (read back by ``from_ngff_zarr``) is
+copied through: every level is its own frame, written by
+``write_image``. Either way the levels are written in order, one at a
+time, on the calling thread.
 """
 
 from __future__ import annotations
@@ -503,10 +507,10 @@ def write_image_batch(
         return
     spark = fields[0][0].sparkSession
     register(spark)
-    # Thread-safety for the overlapped-jobs caller (hcs.write_hcs_fields
-    # runs independent batches from a small pool — guide §2.6): pin
+    # Two callers run this off the main thread: hcs.write_hcs_fields'
+    # batch pool and the streaming drain's foreachBatch thread. Pin
     # this thread's active session to the DataFrames' own session for
-    # the call (the foreachBatch caller thread's active session is the
+    # the call (the foreachBatch thread's active session is the
     # micro-batch clone and comes back on exit).
     with _pinned_active_session(spark):
         grid = [-(-shape[d] // chunks.get(d, 1)) for d in dims]
@@ -866,10 +870,13 @@ def to_ngff_zarr(
     progress: Optional["NgffProgress"] = None,
     enabled_rfcs: Optional[list[int]] = None,
 ) -> None:
-    """Write the pyramid to an OME-Zarr store (S4). Levels are written
-    sequentially; level i>0 is recomputed *from the stored level i-1*
-    (O3) rather than from the level-0 plan, so each job's lineage is one
-    downsample step deep and reads the smaller input.
+    """Write the pyramid to an OME-Zarr store (S4). Every level is
+    written in order, one at a time, on the calling thread. With a build
+    recipe, level i>0 is recomputed *from the stored level i-1* (O3)
+    rather than from the level-0 plan, so each job's lineage is one
+    downsample step deep, reads the smaller input, and every stored
+    level is the downsample of the stored level before it. Without one
+    (a read-back pyramid), each level's own frame is copied through.
 
     ``dtype`` defaults to the base image's logical dtype (reference
     behavior: the store preserves the input array dtype — a uint16
@@ -963,135 +970,7 @@ def to_ngff_zarr(
             cps[d] = max(1, min(int(as_dict.get(d, 1)), grid_d))
         return cps
 
-    @contextlib.contextmanager
-    def _write_pool(workers: int):
-        """Concurrent level writes: yields a submit((img, path, df,
-        cps)) function; exiting the block waits for every write and
-        propagates the first failure. Each worker pins the JVM
-        thread-local active session (_pinned_active_session). Without a
-        JVM handle (Spark Connect) there is nothing to pin, so submit
-        runs each write inline, in submit order."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_level(args):
-            img_i, path_i, df_i, cps_i = args
-            with _pinned_active_session(spark):
-                spark.sparkContext.setJobDescription(f"pyramid write {path_i}")
-                write_image(
-                    df_i,
-                    store_path,
-                    path_i,
-                    img_i.shape,
-                    img_i.dims,
-                    {
-                        d: min(chunks.get(d, 1), max(1, img_i.shape[d]))
-                        for d in img_i.dims
-                    },
-                    dtype=dtype,
-                    compressor=compressor,
-                    zarr_format=zarr_format,
-                    chunks_per_shard=cps_i,
-                )
-
-        if not _has_jvm(spark):
-            yield _write_level
-            return
-        futs = []
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            yield lambda args: futs.append(pool.submit(_write_level, args))
-            for f in futs:
-                f.result()
-
-    # Non-Gaussian methods only (bin shrink, nearest, mode, label
-    # mode): OVERLAP the level-0 and level-1 write jobs. Level 1 is ONE
-    # downsample step deep whether it reads the stored level 0 or the
-    # base frame — the O3 contract bounds lineage depth, not which copy
-    # of the bytes the step reads — and for an identity-roundtrip dtype
-    # (float64: the writer's astype(float64) and the reader's
-    # astype(np.float64) are both no-ops) the stored read-back holds the
-    # same VALUES as the base frame with v cast to double. So level 1
-    # is computed from the base plan and both write jobs run from a
-    # 2-worker pool; levels >= 2 keep the stored-level read.
-    # - The equality is value-level, not a byte guarantee: an
-    #   aggregate's float result depends on its partial-sum order
-    #   (F.avg in bin_shrink), which follows how each plan is
-    #   partitioned. The stores matched byte for byte on the test
-    #   fixtures; other inputs may differ in the last bit.
-    # - The base plan runs twice: once for the level-0 write and again
-    #   inside the level-1 operator. A cheap scan pays nothing for
-    #   that; an expensive computed base frame pays it in full.
-    # Gaussian methods never take this branch: write_gaussian_level
-    # reads the stored level with no exchange, which is cheaper than a
-    # second pass over the base plan. Falls back to the sequential path
-    # whenever progress reporting, computed callbacks (T3 fires per
-    # level IN write order), sharding, or a non-identity dtype is in
-    # play.
-    pipeline_l1 = (
-        recompute
-        and gaussian_kernel is None
-        and len(multiscales.images) >= 2
-        and progress is None
-        and chunks_per_shard is None
-        and dtype == "float64"
-        and not any(im.computed_callbacks for im in multiscales.images)
-    )
-    start_i = 0
-    if pipeline_l1:
-        img0, img1 = multiscales.images[0], multiscales.images[1]
-        path0, path1 = _level_path(0, img0), _level_path(1, img1)
-        rel = relative_dim_factors(img0.dims, multiscales.scale_factors[0], previous)
-        df1 = op(
-            img0.data.withColumn("v", F.col("v").cast("double")),
-            img0.shape,
-            rel,
-        )
-        previous = update_previous_dim_factors(
-            multiscales.scale_factors[0], base.spatial_dims(), previous
-        )
-        for path in (path0, path1):
-            if "/" in path:
-                store.write_group(path.rsplit("/", 1)[0], {}, zarr_format)
-
-        with _write_pool(2) as submit:
-            submit((img0, path0, img0.data, None))
-            submit((img1, path1, df1, None))
-        prev_img, prev_path = img1, path1
-        start_i = 2
-
-    # r20 (guide §2.6, the copy-through sibling of pipeline_l1): when
-    # the pyramid carries NO build recipe (read-back pyramids being
-    # converted/copied, or explicitly materialized per-level frames
-    # like the imaging gate's sharded store), every level already has
-    # its OWN independent frame — the level writes have no data
-    # dependency at all, so they run from the same 2-worker pool. Same
-    # fallbacks as pipeline_l1 (progress reporting and computed
-    # callbacks keep the sequential per-level order).
-    parallel_copy = (
-        not recompute
-        and start_i == 0
-        and len(multiscales.images) >= 2
-        and progress is None
-        and not any(im.computed_callbacks for im in multiscales.images)
-    )
-    if parallel_copy:
-        jobs = []
-        for i, img in enumerate(multiscales.images):
-            path = _level_path(i, img)
-            lvl_chunks = {
-                d: min(chunks.get(d, 1), max(1, img.shape[d])) for d in img.dims
-            }
-            if "/" in path:
-                store.write_group(path.rsplit("/", 1)[0], {}, zarr_format)
-            jobs.append((img, path, img.data, _level_cps(img, lvl_chunks)))
-        with _write_pool(2) as submit:
-            for job in jobs:
-                submit(job)
-        prev_img, prev_path = multiscales.images[-1], jobs[-1][1]
-        start_i = len(multiscales.images)
-
     for i, img in enumerate(multiscales.images):
-        if i < start_i:
-            continue
         path = _level_path(i, img)
         lvl_chunks = {d: min(chunks.get(d, 1), max(1, img.shape[d])) for d in img.dims}
         cps = _level_cps(img, lvl_chunks)

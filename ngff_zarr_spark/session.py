@@ -109,28 +109,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None):
-    """Register the driver-provided star-schema parquet tables as temp views.
-
-    Returns a dict of DataFrames. Reads are plain parquet scans so
-    Catalyst gets pushdown + pruning for free.
-    """
-    names = tables or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -265,11 +265,6 @@ def sniff_store_attrs(attrs: dict) -> tuple[str, str]:
     return (version if version in _KNOWN_VERSIONS else fallback), model
 
 
-def schema_versions() -> list[str]:
-    """Spec versions with vendored schemas (sorted)."""
-    return sorted(p.name for p in _SPEC_DIR.iterdir() if (p / "schemas").is_dir())
-
-
 def load_schema(version: str = "0.4", model: str = "image", strict: bool = False) -> dict:
     """Load one vendored OME-NGFF spec schema as a dict (the reference's
     load_schema, validate.py:13-29: ``spec/{version}/schemas/

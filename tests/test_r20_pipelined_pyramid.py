@@ -1,8 +1,10 @@
-"""r20: the pipelined two-level pyramid write (to_ngff_zarr overlaps
-the level-0 and level-1 write jobs when the dtype roundtrip is an
-identity) must produce a store BYTE-identical to the sequential
-stored-read path, and must fall back to the sequential path whenever
-its preconditions fail."""
+"""to_ngff_zarr writes every level in order, one at a time, on the
+calling thread. These tests pin that a run with progress reporting and
+one without, and a run with a JVM handle and one without (Spark
+Connect), give byte-identical stores, for recipe pyramids and for
+copy-through pyramids; that computed callbacks fire in level order; and
+that the session-pinning helper used by the batch writers leaves a
+fresh thread as it found it."""
 
 from __future__ import annotations
 
@@ -59,7 +61,7 @@ def _ms(spark, dtype=None):
 
 
 class _Prog:
-    """Minimal progress stub — forces the sequential fallback path."""
+    """Minimal progress stub: a run with progress reporting."""
 
     def update(self, *a):
         pass
@@ -79,9 +81,8 @@ def test_pipelined_write_matches_sequential_bytes(spark, tmp_path):
 
 
 def test_non_identity_dtype_falls_back_and_roundtrips(spark, tmp_path):
-    # uint16 is NOT an identity roundtrip (writer casts to uint16) —
-    # the pipelined branch must not fire; the store must match the
-    # sequential path byte-for-byte regardless
+    # uint16 is NOT an identity roundtrip (writer casts to uint16);
+    # the store must not depend on progress reporting
     a = str(tmp_path / "u16a.ome.zarr")
     b = str(tmp_path / "u16b.ome.zarr")
     to_ngff_zarr(a, _ms(spark), version="0.4", compressor="gzip", dtype="uint16")
@@ -94,8 +95,8 @@ def test_non_identity_dtype_falls_back_and_roundtrips(spark, tmp_path):
 
 def test_parallel_copy_through_matches_sequential_bytes(spark, tmp_path):
     # recompute=False path (read-back/explicit pyramids): every level
-    # has its own frame and the writes run from a pool — bytes must
-    # match the sequential order, including the v3 sharded layout
+    # has its own frame and is copied through — bytes must not depend
+    # on progress reporting, including the v3 sharded layout
     from ngff_zarr_spark.ome_zarr_api import from_ngff_zarr, to_ngff_zarr
 
     src = str(tmp_path / "src.ome.zarr")
@@ -156,9 +157,9 @@ def test_pinned_session_cleared_on_exit_in_fresh_thread(spark):
 
 
 def test_write_pool_runs_inline_without_jvm(spark, tmp_path, monkeypatch):
-    # Spark Connect has no JVM handle to pin: the pipelined level
-    # writes must run on the calling thread instead of the pool, and
-    # the store must match the sequential path byte-for-byte
+    # Spark Connect has no JVM handle to pin: the level writes run on
+    # the calling thread, and the store must match the run with a JVM
+    # handle and progress reporting byte-for-byte
     import threading
 
     import ngff_zarr_spark.ome_zarr_api as api
@@ -181,3 +182,30 @@ def test_write_pool_runs_inline_without_jvm(spark, tmp_path, monkeypatch):
         b, _ms(spark), version="0.4", compressor="gzip", progress=_Prog()
     )
     assert _tree_digest(a) == _tree_digest(b)
+
+
+def test_level_writes_run_on_the_calling_thread(spark, tmp_path, monkeypatch):
+    # one level loop: every level write, recipe or copy-through, runs
+    # on the caller's thread and in level order, with the JVM present
+    import threading
+
+    import ngff_zarr_spark.ome_zarr_api as api
+
+    calls = []
+    real_write = api.write_image
+
+    def recording_write(df, store_path, path, *a, **k):
+        calls.append((threading.current_thread(), path))
+        return real_write(df, store_path, path, *a, **k)
+
+    monkeypatch.setattr(api, "write_image", recording_write)
+    me = threading.current_thread()
+    src = str(tmp_path / "recipe.ome.zarr")
+    to_ngff_zarr(src, _ms(spark), version="0.4", compressor="gzip")
+    assert calls == [(me, "scale0/image"), (me, "scale1/image")]
+
+    calls.clear()
+    ms2 = api.from_ngff_zarr(spark, src)  # no build recipe -> copy-through
+    assert not ms2.scale_factors
+    to_ngff_zarr(str(tmp_path / "copy.ome.zarr"), ms2, version="0.4", compressor="gzip")
+    assert calls == [(me, "scale0/image"), (me, "scale1/image")]
