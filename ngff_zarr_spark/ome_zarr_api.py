@@ -55,7 +55,7 @@ from .plans.planner import (
     update_previous_dim_factors,
 )
 from .sources.ome_zarr import array_docs, register
-from .sources.zarr_store import ZarrArrayMeta, open_store, read_box
+from .sources.zarr_store import ChunkSink, ZarrArrayMeta, open_store, read_box
 
 # The *_GAUSSIAN methods share one separable convolution but select
 # DIFFERENT kernel weights: ITK/ITK-Wasm use the discrete Gaussian
@@ -360,7 +360,6 @@ def write_image(
         .option("dims", ",".join(dims))
         .option("dtype", dtype)
         .option("compressor", compressor or "")
-        .option("packed", "true")
     )
     if chunks_per_shard:
         writer = writer.option(
@@ -583,7 +582,6 @@ def write_image_batch(
                 .option("dims", ",".join(dims))
                 .option("dtype", dtype)
                 .option("compressor", compressor or "")
-                .option("packed", "true")
                 .save()
             )
         finally:
@@ -704,52 +702,22 @@ def copy_array(
 
     axes = _axis_map(meta.dimension_names, len(meta.shape))
     np_dtype = str(meta.dtype)
-    sharded = meta.chunks_per_shard is not None
 
     def write_parts(batches):
-        store = open_store(dst_store, dst_storage_options)
+        # the sink raises if a shard is flushed twice (a broken
+        # contiguity invariant above would otherwise silently discard
+        # the first flush's chunks; ADVICE r17)
+        sink = ChunkSink(open_store(dst_store, dst_storage_options))
         n = 0
-        cur_shard, shard_chunks = None, {}
-        # write_shard overwrites the whole shard object, so the
-        # contiguity invariant above is load-bearing: a second flush of
-        # the same shard index would silently discard the first one's
-        # chunks. Track flushed indices and fail LOUDLY on a repeat
-        # instead of corrupting the copy (ADVICE r17).
-        flushed = set()
-
-        def flush_shard():
-            nonlocal cur_shard, shard_chunks
-            if cur_shard is not None and shard_chunks:
-                if cur_shard in flushed:
-                    raise RuntimeError(
-                        f"copy_array: shard {cur_shard} flushed twice in "
-                        "one task — the chunk-table reader no longer "
-                        "emits each shard's chunks contiguously; a "
-                        "second write_shard would discard the first "
-                        "flush's chunks"
-                    )
-                store.write_shard(dst_meta, cur_shard, shard_chunks)
-                flushed.add(cur_shard)
-            cur_shard, shard_chunks = None, {}
-
         for pdf in batches:
             for _, row in pdf.iterrows():
-                cidx = tuple(int(row[f"ck_{d}"]) for d in axes)
-                extent = tuple(int(row[f"ex_{d}"]) for d in axes)
                 # payload is the clipped (valid-extent) buffer
                 arr = np.frombuffer(
                     row["payload"], dtype=np.dtype(np_dtype).newbyteorder("<")
-                ).reshape(extent)
-                if sharded:
-                    sidx, inner = dst_meta.shard_index_of(cidx)
-                    if cur_shard is not None and sidx != cur_shard:
-                        flush_shard()
-                    cur_shard = sidx
-                    shard_chunks[inner] = arr
-                else:
-                    store.write_chunk(dst_meta, cidx, arr)
+                ).reshape(tuple(int(row[f"ex_{d}"]) for d in axes))
+                sink.put(dst_meta, tuple(int(row[f"ck_{d}"]) for d in axes), arr)
                 n += 1
-        flush_shard()
+        sink.close()
         yield pd.DataFrame({"n": [n]})
 
     counts = chunks_df.mapInPandas(write_parts, "n long")
@@ -780,8 +748,8 @@ def write_gaussian_level(
     when ``chunks_per_shard`` is set, and each task, per unit, reads its
     input box plus the kernel-radius halo from the stored source
     (``read_box``), edge-pads the part of the halo outside the image,
-    runs ``gaussian_block`` and writes the unit with ``write_chunk`` /
-    ``write_shard``. The arithmetic is the window form's
+    runs ``gaussian_block`` and hands the unit's chunks to a
+    ``ChunkSink``. The arithmetic is the window form's
     (``METHODS[m]``) float64 sequence and the store cast is the
     writer's ``astype``, so the bytes equal ``read_image`` → ``METHODS``
     → ``write_image``. Like the DataSource writer, the array prefix is
@@ -806,9 +774,9 @@ def write_gaussian_level(
     fac = [int(factors.get(d, 1)) for d in dims]
     rad = [len(weights[d]) - 1 if d in weights else 0 for d in dims]
     sample = tuple(slice(None, None, f) for f in fac)
-    sharded = dst.chunks_per_shard is not None
-    unit = dst.shard_shape if sharded else dst.chunks
-    grid = dst.shard_grid if sharded else dst.chunk_grid
+    per_unit = dst.chunks_per_shard or (1,) * len(dims)
+    unit = tuple(c * n for c, n in zip(dst.chunks, per_unit))
+    grid = tuple(-(-s // u) for s, u in zip(dst.shape, unit))
     n_units = math.prod(grid)
 
     def downsample(st, o_lo, o_hi) -> np.ndarray:
@@ -826,25 +794,22 @@ def write_gaussian_level(
 
     def write_units(batches):
         st = open_store(store_path)
+        sink = ChunkSink(st)
         for batch in batches:
             for u in batch.column("id").to_numpy():
                 uidx = tuple(int(i) for i in np.unravel_index(int(u), grid))
                 o_lo = tuple(i * s for i, s in zip(uidx, unit))
                 o_hi = tuple(min(e, a + s) for a, s, e in zip(o_lo, unit, dst.shape))
                 out = downsample(st, o_lo, o_hi)
-                if not sharded:
-                    st.write_chunk(dst, uidx, out)
-                    continue
-                # split the shard into its inner chunks; slices past the
-                # array edge clip to the chunk's valid extent
-                inner_chunks = {}
-                for inner in np.ndindex(*dst.chunks_per_shard):
-                    cidx = tuple(i * n + j for i, n, j in zip(uidx, dst.chunks_per_shard, inner))
+                # the unit's chunks, in C order; slices past the array
+                # edge clip to each chunk's valid extent
+                for inner in np.ndindex(*per_unit):
+                    cidx = tuple(i * n + j for i, n, j in zip(uidx, per_unit, inner))
                     if all(ci < g for ci, g in zip(cidx, dst.chunk_grid)):
-                        inner_chunks[inner] = out[
+                        sink.put(dst, cidx, out[
                             tuple(slice(j * c, (j + 1) * c) for j, c in zip(inner, dst.chunks))
-                        ]
-                st.write_shard(dst, uidx, inner_chunks)
+                        ])
+        sink.close()
         return iter(())
 
     store.delete_prefix(dst_path)

@@ -11,16 +11,20 @@ millions of independent chunk reads with no driver materialization.
 ``pushFilters`` implements O11: comparison predicates on the coordinate
 columns prune non-intersecting chunks *before* tasks launch (the classic
 partition-pruning shape); all filters are still returned to Spark for
-exact row-level re-evaluation inside surviving chunks. Chunk bytes are
-decoded to numpy and emitted as Arrow RecordBatches (vectorized, no
-per-row Python).
+exact row-level re-evaluation inside surviving chunks. Each task walks
+its chunks with ``zarr_store.iter_chunks``, the store layer's one chunk
+walk (it owns the shard layout), and emits one Arrow RecordBatch per
+chunk (vectorized, no per-row Python).
 
 Write side (S4/S6): ``DataSourceArrowWriter`` — each task assembles the
-chunks wholly contained in its partition and puts them to the store;
-``commit`` runs once on the driver. Callers must pre-partition by chunk
-key (ome_zarr_api.write_image does) so no chunk spans two tasks — the
-same invariant the reference establishes by rechunking before write
-(_align_chunks, to_ngff_zarr.py:1093-1101).
+chunks wholly contained in its partition and hands them to a
+``zarr_store.ChunkSink``, which puts chunks and packs shard files;
+``commit`` runs once on the driver. The input is the packed ``(ck, off,
+v)`` row form, pre-partitioned by chunk key (shard key when sharded) so
+no chunk or shard spans two tasks — the same invariant the reference
+establishes by rechunking before write (_align_chunks,
+to_ngff_zarr.py:1093-1101). A shard whose chunks arrive out of order
+raises instead of being overwritten.
 """
 
 from __future__ import annotations
@@ -52,10 +56,10 @@ from pyspark.sql.types import (
 )
 
 from .zarr_store import (
+    ChunkSink,
     ZarrArrayMeta,
-    ZarrStore,
-    decode_chunk,
     encode_chunk,
+    iter_chunks,
     open_store,
 )
 
@@ -151,6 +155,16 @@ def _resolve_array_path(options: dict) -> str:
     return f"scale{int(options.get('scale', '0'))}/image"
 
 
+def _read_mode(options: dict) -> str:
+    """The ``mode`` option: ``pixel`` (default) or ``chunk``. Anything
+    else is rejected; a typo such as ``chunks`` would otherwise read
+    the pixel table without a word."""
+    mode = options.get("mode", "pixel")
+    if mode not in ("pixel", "chunk"):
+        raise ValueError(f"mode must be 'pixel' or 'chunk', got {mode!r}")
+    return mode
+
+
 def _parse_storage_options(options: dict) -> Optional[dict]:
     """S2: fsspec ``storage_options`` ride through the DataSource as a
     JSON string option (DataSource options are str→str); parsed once on
@@ -167,7 +181,7 @@ class OmeZarrReader(DataSourceReader):
     def __init__(self, options: dict, meta=None):
         self.path = options["path"]
         self.zarr_format = int(options.get("zarr_format", "2"))
-        self.mode = options.get("mode", "pixel")  # pixel | chunk
+        self.mode = _read_mode(options)
         self.storage_options = _parse_storage_options(options)
         self.array_path = _resolve_array_path(options)
         if meta is None:
@@ -273,18 +287,6 @@ class OmeZarrReader(DataSourceReader):
             rel = np.unravel_index(flat, part.box_shape)
             yield tuple(int(b + r) for b, r in zip(part.box_lo, rel))
 
-    def _chunk_pruned(self, origin, extent) -> bool:
-        for ax, o, e in zip(self.axes, origin, extent):
-            b = self.bounds.get(ax)
-            if not b:
-                continue
-            lo, hi = b
-            if lo is not None and o + e <= lo:
-                return True
-            if hi is not None and o >= hi:
-                return True
-        return False
-
     def _chunk_batch(self, arr: np.ndarray, origin, extent) -> pa.RecordBatch:
         coords = np.meshgrid(
             *[np.arange(o, o + e, dtype=np.int64) for o, e in zip(origin, extent)],
@@ -335,55 +337,32 @@ class OmeZarrReader(DataSourceReader):
         return pa.RecordBatch.from_arrays(cols, names=names)
 
     def read(self, partition: ChunkRangePartition) -> Iterator[pa.RecordBatch]:
+        """One RecordBatch per chunk. Each planned unit (a chunk, or a
+        shard) is clipped to the pruned chunk box and walked with
+        ``iter_chunks``, so a shard's index is fetched once. The chunk
+        table holds STORED chunks only: synthesizing fill rows for
+        never-written chunks would densify every sparse copy
+        prod(grid)/n_stored-fold (code-review r17). The pixel table IS
+        the logical array, so a missing chunk reads as ``fill_value``."""
         store = open_store(self.path, self.storage_options)
         m = self.meta
-        sharded = m.chunks_per_shard is not None
-        for unit_idx in self._box_indices(partition):
-            if sharded:
-                # one shard: ONE index fetch serves every inner-chunk
-                # ranged read (3 requests/chunk → 1/shard + 1/chunk)
-                index = store.shard_index(m, unit_idx)
-                if index is None and self.mode == "chunk":
-                    continue  # never-written shard: no chunk-table rows
-                cps = m.chunks_per_shard
-                base = tuple(i * n for i, n in zip(unit_idx, cps))
-                for flat in range(int(np.prod(cps))):
-                    inner = np.unravel_index(flat, cps)
-                    cidx = tuple(int(b + i) for b, i in zip(base, inner))
-                    if any(ci >= g for ci, g in zip(cidx, m.chunk_grid)):
-                        continue
-                    origin = m.chunk_origin(cidx)
-                    extent = m.chunk_extent(cidx)
-                    if self._chunk_pruned(origin, extent):
-                        continue
-                    if self.mode == "chunk" and (
-                        int(index[flat][0]) == 0xFFFFFFFFFFFFFFFF
-                    ):
-                        continue  # hole in the shard: not a stored chunk
-                    arr = store.read_chunk_via_index(m, cidx, index)
-                    if self.mode == "chunk":
-                        yield self._chunk_row_batch(arr, cidx, extent)
-                    else:
-                        yield self._chunk_batch(arr, origin, extent)
-            else:
-                extent = m.chunk_extent(unit_idx)
+        per_unit = m.chunks_per_shard or (1,) * len(m.shape)
+        box_lo, box_shape = self._pruned_box(m.chunks)
+        for unit in self._box_indices(partition):
+            c_lo = tuple(max(u * n, b) for u, n, b in zip(unit, per_unit, box_lo))
+            c_hi = tuple(
+                min((u + 1) * n, b + s)
+                for u, n, b, s in zip(unit, per_unit, box_lo, box_shape)
+            )
+            for cidx, arr in iter_chunks(m, store, c_lo, c_hi):
+                extent = m.chunk_extent(cidx)
                 if self.mode == "chunk":
-                    # chunk table = STORED chunks only: synthesizing
-                    # fill rows for never-written chunks would densify
-                    # every sparse copy prod(grid)/n_stored-fold
-                    # (code-review r17); pixel mode stays dense — the
-                    # pixel table IS the logical array contents
-                    data = store.get_or_none(m.chunk_key(unit_idx))
-                    if data is None:
-                        continue
-                    arr = decode_chunk(
-                        data, m.dtype, m.chunks, m.compressor,
-                        m.byte_order, m.order,
-                    )[tuple(slice(0, e) for e in extent)]
-                    yield self._chunk_row_batch(arr, unit_idx, extent)
-                else:
-                    arr = store.read_chunk(m, unit_idx)
-                    yield self._chunk_batch(arr, m.chunk_origin(unit_idx), extent)
+                    if arr is not None:
+                        yield self._chunk_row_batch(arr, cidx, extent)
+                    continue
+                if arr is None:
+                    arr = np.full(extent, m.fill_value, dtype=m.dtype)
+                yield self._chunk_batch(arr, m.chunk_origin(cidx), extent)
 
 
 def array_docs(meta: ZarrArrayMeta, dims: list[str]) -> dict[str, dict]:
@@ -420,7 +399,6 @@ class OmeZarrWriter(DataSourceArrowWriter):
         self.array_paths = (
             _json.loads(options["array_paths"]) if "array_paths" in options else None
         )
-        self.packed = options.get("packed") == "true"
         self.storage_options = _parse_storage_options(options)
         if overwrite:
             # __init__ runs on the driver before tasks launch: clear the
@@ -459,53 +437,30 @@ class OmeZarrWriter(DataSourceArrowWriter):
         return dataclasses.replace(self.meta, path=self.array_paths[fid])
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> ChunkWriteCommit:
-        """Input is pre-partitioned AND pre-sorted by chunk key
-        (write_image), so each chunk's rows arrive contiguously: keep at
-        most one chunk buffer in memory, flush when the key advances.
-        (Unsorted input still works — a finished chunk just flushes and a
-        reappearing key would overwrite, which sortedness precludes.)"""
-        store = open_store(self.path, self.storage_options)
+        """Input rows are the packed ``(ck, off, v)`` form that
+        write_image and write_image_batch emit, the only input form:
+        ``ck`` is the flat chunk index (mixed radix over the chunk grid,
+        with the array index as the highest digit in a multi-array
+        write) and ``off`` the flat position inside the chunk. Rows come
+        pre-partitioned and pre-sorted by chunk key (sharded: by shard,
+        then chunk), so each chunk's rows arrive contiguously: keep at
+        most one chunk buffer and hand it to a ``ChunkSink`` when the
+        key advances. The sink writes a shard file once its chunks are
+        done; a shard whose chunks arrive out of order raises ("flushed
+        twice") instead of being overwritten."""
+        sink = ChunkSink(open_store(self.path, self.storage_options))
         m = self.meta
         multi = self.array_paths is not None
-        if multi and not self.packed:
-            raise ValueError("multi-array writes require the packed row form")
-        n_chunks_per_array = int(np.prod(m.chunk_grid)) if multi else 0
-        keys: list = []
+        n_chunks = int(np.prod(m.chunk_grid))
         cur_fid: int = 0
         cur_idx: tuple | None = None
         cur_buf: np.ndarray | None = None
-        # sharded writes buffer the current shard's finished chunks and
-        # emit one shard file when the shard key advances (write_image
-        # sorts rows by shard-then-chunk key, so both are contiguous)
-        cur_shard: tuple | None = None
-        shard_chunks: dict = {}
-
-        def flush_shard():
-            nonlocal cur_shard, shard_chunks
-            if cur_shard is None or not shard_chunks:
-                cur_shard, shard_chunks = None, {}
-                return
-            store.write_shard(m, cur_shard, shard_chunks)
-            keys.append(m.shard_key(cur_shard))
-            cur_shard, shard_chunks = None, {}
 
         def flush():
-            nonlocal cur_idx, cur_buf, cur_shard
-            if cur_idx is None:
-                return
-            mm = self._meta_for(cur_fid)
-            extent = mm.chunk_extent(cur_idx)
-            clipped = cur_buf[tuple(slice(0, e) for e in extent)]
-            if mm.chunks_per_shard is not None:
-                sidx, inner = mm.shard_index_of(cur_idx)
-                if cur_shard is not None and sidx != cur_shard:
-                    flush_shard()
-                cur_shard = sidx
-                shard_chunks[inner] = clipped
-            else:
-                store.write_chunk(mm, cur_idx, clipped)
-                keys.append(mm.chunk_key(cur_idx))
-            cur_idx, cur_buf = None, None
+            if cur_idx is not None:
+                mm = self._meta_for(cur_fid)
+                extent = mm.chunk_extent(cur_idx)
+                sink.put(mm, cur_idx, cur_buf[tuple(slice(0, e) for e in extent)])
 
         for batch in iterator:
             if batch.num_rows == 0:
@@ -540,62 +495,27 @@ class OmeZarrWriter(DataSourceArrowWriter):
                 ).astype(np.float64)
             else:
                 vals = vcol.to_numpy(zero_copy_only=False)
-            if self.packed:
-                # (ck, off) mixed-radix form from write_image: decode
-                # per-dim chunk indices and within-chunk coords with
-                # vectorized divmods (last dim fastest, matching the
-                # fold order on the Spark side)
-                ck = batch.column("ck").to_numpy(zero_copy_only=False).astype(np.int64)
-                off = batch.column("off").to_numpy(zero_copy_only=False).astype(np.int64)
-                if multi:
-                    fids = ck // n_chunks_per_array
-                    ck = ck % n_chunks_per_array
-                else:
-                    fids = None
-                chunk_ids = [None] * len(m.chunks)
-                rem = ck
-                for i in range(len(m.chunk_grid) - 1, 0, -1):
-                    chunk_ids[i] = rem % m.chunk_grid[i]
-                    rem = rem // m.chunk_grid[i]
-                chunk_ids[0] = rem
-                local_cols = [None] * len(m.chunks)
-                rem = off
-                for i in range(len(m.chunks) - 1, 0, -1):
-                    local_cols[i] = rem % m.chunks[i]
-                    rem = rem // m.chunks[i]
-                local_cols[0] = rem
-                coord_cols = None
-            else:
-                coord_cols = [
-                    batch.column(d).to_numpy(zero_copy_only=False).astype(np.int64)
-                    for d in self.dims
-                ]
-                chunk_ids = [c // s for c, s in zip(coord_cols, m.chunks)]
-                local_cols = None
-            flat = chunk_ids[0]
-            grid = m.chunk_grid
-            for g, ci in zip(grid[1:], chunk_ids[1:]):
-                flat = flat * g + ci
+            # decode per-dim chunk indices and within-chunk coords in C
+            # order (last dim fastest, matching the fold order on the
+            # Spark side)
+            sortkey = batch.column("ck").to_numpy(zero_copy_only=False).astype(np.int64)
+            off = batch.column("off").to_numpy(zero_copy_only=False).astype(np.int64)
+            fids, ck = np.divmod(sortkey, n_chunks) if multi else (None, sortkey)
+            chunk_ids = np.unravel_index(ck, m.chunk_grid)
+            local_cols = np.unravel_index(off, m.chunks)
             if m.chunks_per_shard is not None:
                 # order by (shard, chunk): flat chunk order interleaves
-                # shards, which would flush (and overwrite) a shard file
-                # more than once
-                sgrid = m.shard_grid
-                sflat = chunk_ids[0] // m.chunks_per_shard[0]
-                for sg, ci, cp in zip(sgrid[1:], chunk_ids[1:], m.chunks_per_shard[1:]):
-                    sflat = sflat * sg + ci // cp
-                sortkey = sflat * int(np.prod(grid)) + flat
-            elif multi:
-                # fid is the highest radix digit, so same-array chunks
-                # stay contiguous and each (fid, chunk) flushes once
-                sortkey = fids * n_chunks_per_array + flat
-            else:
-                sortkey = flat
+                # shards, and a shard must reach the sink contiguously
+                sflat = np.ravel_multi_index(
+                    [ci // n for ci, n in zip(chunk_ids, m.chunks_per_shard)],
+                    m.shard_grid,
+                )
+                sortkey = sflat * n_chunks + ck
+            # a multi-array ck keeps the array index as its highest
+            # digit, so same-array chunks stay contiguous
             order = np.argsort(sortkey, kind="stable")
-            flat_sorted = sortkey[order]
-            boundaries = np.flatnonzero(np.diff(flat_sorted)) + 1
-            groups = np.split(order, boundaries)
-            for grp in groups:
+            boundaries = np.flatnonzero(np.diff(sortkey[order])) + 1
+            for grp in np.split(order, boundaries):
                 i0 = grp[0]
                 idx = tuple(int(ci[i0]) for ci in chunk_ids)
                 fid = int(fids[i0]) if multi else 0
@@ -604,16 +524,9 @@ class OmeZarrWriter(DataSourceArrowWriter):
                     cur_fid = fid
                     cur_idx = idx
                     cur_buf = np.full(m.chunks, m.fill_value, dtype=m.dtype)
-                if local_cols is not None:
-                    local = tuple(lc[grp] for lc in local_cols)
-                else:
-                    local = tuple(
-                        c[grp] - i * s for c, i, s in zip(coord_cols, idx, m.chunks)
-                    )
-                cur_buf[local] = vals[grp].astype(m.dtype)
+                cur_buf[tuple(lc[grp] for lc in local_cols)] = vals[grp].astype(m.dtype)
         flush()
-        flush_shard()
-        return ChunkWriteCommit(chunk_keys=keys)
+        return ChunkWriteCommit(chunk_keys=sink.close())
 
     def commit(self, messages):
         """Publish every array's metadata in ONE batched store call:
@@ -649,7 +562,7 @@ class OmeZarrDataSource(DataSource):
         return "ome_zarr"
 
     def schema(self):
-        if self.options.get("mode", "pixel") == "chunk":
+        if _read_mode(self.options) == "chunk":
             return CHUNK_SCHEMA
         # reads of a complex array surface v as struct<re,im>; a write
         # target may not exist yet (schema comes from the input df then)

@@ -294,3 +294,13 @@ def test_spark_job_failure_then_overwrite_recovers(spark, tmpdirs):
 
     write_image(pixels(False), target, "scale0/image", shape, dims, chunks)
     assert _tree(target) == ref
+
+
+def test_sharded_writer_rejects_reflushed_shard(tmpdirs):
+    """Packed batches in the order shard A, shard B, shard A (chunks 0,
+    1, 3 with 2x1 chunks per shard): writing shard A a second time
+    would drop the chunk of its first write, so the task must raise."""
+    w = _writer(os.path.join(tmpdirs, "reflush"), cps=(2, 1), zarr_format=3)
+    batches = iter([_packed_batch({0}), _packed_batch({1}), _packed_batch({3})])
+    with pytest.raises(RuntimeError, match="flushed twice"):
+        w.write(batches)

@@ -108,6 +108,57 @@ def test_v3_inline_sync_once(tmp_path):
     assert set(md) == {f"{i}/image" for i in range(5)}
 
 
+class _ConsolidatedPutFails(ZarrStore):
+    """A store whose put of a consolidated document raises."""
+
+    def put(self, key, data):
+        if key in (".zmetadata", "zarr.json"):
+            raise OSError(f"injected put failure for {key}")
+        super().put(key, data)
+
+
+def _mk_consolidated_v3(path):
+    st = ZarrStore(path)
+    st.put_json(
+        "zarr.json",
+        {
+            "zarr_format": 3, "node_type": "group", "attributes": {},
+            "consolidated_metadata": {"kind": "inline", "metadata": {}},
+        },
+    )
+
+
+def test_consolidated_sync_failure_surfaces(tmp_path):
+    """A failed consolidated-document put leaves readers on stale
+    attributes, so it must raise rather than be swallowed."""
+    v2, v3 = str(tmp_path / "v2"), str(tmp_path / "v3")
+    _mk_consolidated_v2(v2)
+    _mk_consolidated_v3(v3)
+    with pytest.raises(OSError, match="zmetadata"):
+        _ConsolidatedPutFails(v2).put_json("0/image/.zattrs", {"a": 1})
+    with pytest.raises(OSError, match="zmetadata"):
+        _ConsolidatedPutFails(v2).put_json_many(_array_docs(2))
+    v3_doc = ZarrArrayMeta(
+        path="0/image", shape=(4, 4), chunks=(2, 2),
+        dtype=np.dtype("float64"), zarr_format=3,
+    ).to_v3_json()
+    with pytest.raises(OSError, match="zarr.json"):
+        _ConsolidatedPutFails(v3).put_json("0/image/zarr.json", v3_doc)
+    with pytest.raises(OSError, match="zarr.json"):
+        _ConsolidatedPutFails(v3).put_json_many({"0/image/zarr.json": v3_doc})
+
+
+def test_unparseable_consolidated_doc_is_left_alone(tmp_path):
+    """The one tolerated sync failure: a consolidated document that
+    does not parse is not rewritten, and the doc put itself stands."""
+    st = _mk_consolidated_v2(str(tmp_path / "s"))
+    st.put(".zmetadata", b"{not json")
+    st.put_json("0/image/.zattrs", {"a": 1})
+    st.put_json_many(_array_docs(2))
+    assert st.get(".zmetadata") == b"{not json"
+    assert st.get_json("0/image/.zattrs") == {"_ARRAY_DIMENSIONS": ["y", "x"]}
+
+
 def test_writer_commit_syncs_once(tmp_path, monkeypatch):
     """The multi-array OmeZarrWriter.commit (exercised in-process — the
     live job runs it inside the data-source worker) publishes a 6-array

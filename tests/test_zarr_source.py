@@ -136,6 +136,25 @@ def test_chunk_pruning_counts(spark, tmp_path):
     assert got.count() == 8 * 32 * 16
 
 
+def test_unknown_read_mode_is_rejected(tmp_path):
+    """``mode`` is ``pixel`` or ``chunk``; a typo such as ``chunks``
+    must fail instead of silently reading the pixel table."""
+    from ngff_zarr_spark.sources.ome_zarr import OmeZarrDataSource, OmeZarrReader
+
+    st = ZarrStore(str(tmp_path))
+    meta = ZarrArrayMeta(
+        path="scale0/image", shape=(4, 4), chunks=(2, 2), dtype=np.dtype("uint8")
+    )
+    st.write_array_meta(meta)
+    opts = {"path": str(tmp_path), "array_path": "scale0/image"}
+    for mode in ("pixel", "chunk"):
+        OmeZarrReader({**opts, "mode": mode})
+    with pytest.raises(ValueError, match="chunks"):
+        OmeZarrReader({**opts, "mode": "chunks"})
+    with pytest.raises(ValueError, match="chunks"):
+        OmeZarrDataSource({**opts, "mode": "chunks"}).schema()
+
+
 def test_metadata_version_conversion():
     from ngff_zarr_spark.model import Axis, Dataset, Metadata, ScaleTransform, TranslationTransform
 
